@@ -277,9 +277,10 @@ def run_flagship_once(cores: int, n_docs: int) -> dict:
         for i in range(n_runs + 1)
     ]
     n = slices[1].count()
-    # FIXED salt partition count at every cluster size — a real job sizes
-    # partitions by data volume, and a per-cores count would make the 4N
-    # level pay 4x the (measured ~0.18 core-s) per-task setup of N
+    # FIXED salt partition count at both cluster sizes, so N and 4N run the
+    # same tasks over the same partitions and the ratio compares slot
+    # counts alone (the default, one task per slot, would also charge each
+    # slot one task's setup at either size, but change the task set)
     salt_parts = max(int(n * 2 / 512), 48)  # ~2 media spans/doc, ~512/task
     _materialize(X.extract(slices[0], salt_partitions=salt_parts))  # warm
     walls = []

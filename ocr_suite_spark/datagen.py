@@ -170,7 +170,7 @@ def synthesize(
     ``start`` offsets the doc-id range: slices with different starts share
     the content *distribution* but no individual media_ref — used by the
     scaling bench so repeated runs never re-see an image (at production
-    scale every image is seen once; per-worker memo hits across repeated
+    scale every image is seen once; per-task memo hits across repeated
     identical micro-bench runs would otherwise inflate small-N throughput).
     """
     base = spark.range(start, start + n_docs, 1, partitions or spark.sparkContext.defaultParallelism)

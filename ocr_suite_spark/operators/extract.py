@@ -6,7 +6,7 @@ decode frames -> bounded queue -> OCR threads -> per-frame store, i.e.
     documents --explode--> spans --route by kind-->
         text path  : boilerplate-strip normalizer (pure Column exprs)
         media path : salt -> repartition -> mapInPandas OCR (Arrow batches,
-                     per-worker recognizer init = reference's per-thread
+                     per-task recognizer init ~ reference's per-thread
                      Tesseract instance, main.cpp:136-177)
     --union--> flat extracted spans --groupBy(doc_id) + sort by offset-->
     merged (kind, text, media_ref, order) sequences.
@@ -31,10 +31,6 @@ from pyspark.sql import functions as F
 from .. import MIN_TOKEN_LEN
 
 _FLAT_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
-# salt-partition sizing: ~45 measured bytes/row in Catalyst's estimate for
-# the (doc_id, offset, media_ref) projection; ~512 rows (~2 s of OCR) per task
-_EST_BYTES_PER_ROW = 48
-_TARGET_ROWS_PER_TASK = 512
 _WORDS_SCHEMA = (
     "doc_id string, order int, media_ref string, word string, "
     "left int, top int, right int, bottom int, confidence float"
@@ -93,9 +89,11 @@ def make_ocr_fn(meter=None, on_error: str = "fail"):
     """Build the mapInPandas fn: (doc_id, offset, media_ref) -> + recognized
     text.
 
-    Iterator-init idiom: the recognizer (template bank) is built once per
-    python worker, then streams Arrow batches — the canonical expensive-init
-    vectorized UDF pattern (SURVEY.md F1). With a SpeedMeter, per-batch
+    Iterator-init idiom: the recognizer (template bank) and the ref memo are
+    built once per mapInPandas task (one partition), then stream that
+    partition's Arrow batches — the canonical expensive-init vectorized UDF
+    pattern (SURVEY.md F1). Python worker reuse keeps the imports warm
+    across tasks, not these objects. With a SpeedMeter, per-batch
     decode/recognize wall time rides back on accumulators (speed_meter
     analog, speed_meter.cpp:35-58).
 
@@ -156,7 +154,7 @@ def make_ocr_words_fn(meter=None, on_error: str = "fail"):
     """Word-level variant of make_ocr_fn: one output row per recognized word
     with bbox + confidence (reference text_entry, ocr_result.h:14-18).
 
-    Same hardening as the text path (it lacked both in r2): per-worker
+    Same hardening as the text path (it lacked both in r2): per-task
     memoization of recognized word tuples per media_ref, and
     on_error='quarantine' — a corrupt payload yields zero word rows for
     that span (counted once per distinct ref on meter.n_errors) instead of
@@ -211,36 +209,25 @@ def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
     partition — the 100TB analog of the reference's largest-video problem
     (which it LPT-balances by file size, search.cpp:117-163).
 
-    One shuffle; uniform salting over fine-grained partitions makes every
-    partition the same expected cost mix (heavy images per partition
-    concentrate tightly at this granularity — a ~Poisson count, i.e. a
-    few-percent task-cost variance the scheduler absorbs across waves).
-    An earlier two-branch variant that repartitioned the heavy and light
-    cost classes separately measured the same in-stage utilization
-    (event-log: 96-98% at 24 slots) but paid its two exchanges as
-    *sequential* jobs under AQE — strictly worse.
-
-    Partition count is sized from the DATA (Catalyst's sizeInBytes
-    estimate — free, no extra scan), not from the cluster: each warm
-    mapInPandas task costs ~0.18 core-s of fixed setup (measured), so a
-    count proportional to cores would over-decompose small inputs and
-    make the big-cluster level pay 4x the task overhead of the small one
-    in an N-vs-4N comparison. Clamped to [1.5x, 10x] parallelism so tasks
-    stay wave-schedulable at any size — the floor was 2x until r4; an
-    interleaved 5-round A/B at sf0.1/local[32] measured 64 tasks at
-    median 3.36 s vs 48 tasks at 2.72 s (salted task costs are
-    near-uniform, so the extra wave bought balance we don't need and paid
-    per-task setup we do). AQE coalescing is NOT used here on purpose:
-    it targets partition bytes, and these rows are bytes-tiny but
-    compute-heavy.
+    One shuffle into one task per slot (defaultParallelism), unless
+    salt_partitions overrides it. (A two-branch variant that repartitioned
+    heavy and light cost classes separately paid its two exchanges as
+    sequential jobs under AQE — strictly worse.) Uniform salting makes
+    every partition the same expected cost mix, so one wave finishes
+    together and there is no last-wave quantization to buy back with more
+    tasks. More tasks only add fixed cost: a mapInPandas task pays ~0.17
+    core-s before its first row even with an identity function (measured
+    on a 4-CPU host), ~0.14 s of it in PySpark's per-task
+    setup_spark_files, whose importlib.invalidate_caches() re-reads
+    pyspark.zip's directory once per cached zip importer. The count is
+    not sized from Catalyst's sizeInBytes estimate: that scales with file
+    bytes and cannot see the kind='media' filter, so it over-decomposes
+    text-heavy input (4x the tasks at ~25 media rows each, most of the
+    OCR stage spent on setup). AQE coalescing is NOT used here on
+    purpose: it targets partition bytes, and these rows are bytes-tiny
+    but compute-heavy.
     """
-    spark = media.sparkSession
-    if salt_partitions:
-        n = salt_partitions
-    else:
-        cores = spark.sparkContext.defaultParallelism
-        est_rows = int(media._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) / _EST_BYTES_PER_ROW
-        n = int(min(max(est_rows / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
+    n = salt_partitions or media.sparkSession.sparkContext.defaultParallelism
     salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n * 4))
     return media.repartition(n, salt)
 

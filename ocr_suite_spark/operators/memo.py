@@ -1,4 +1,4 @@
-"""Per-worker media memoization shared by every media-consuming UDF.
+"""Per-task media memoization shared by every media-consuming UDF.
 
 Five vectorized UDF loops (OCR text + words in operators/extract.py;
 decode-meta, resize, feature-extract in queries/multimodal.py) each carried
@@ -6,7 +6,9 @@ a copy-pasted memo-with-cap loop; unified here after r3 (BENCH.md r3
 "Kernel profile" note). Semantics are unchanged and shared:
 
 - keyed on ``media_ref`` — a payload repeated across many rows is decoded/
-  recognized once per worker (reference analog: the per-thread provider
+  recognized once per mapInPandas task (partition): the memo lives as
+  long as the UDF's iterator, so a repeat in another task misses, even
+  on the same python worker (reference analog: the per-thread provider
   instance, /root/reference src/recognition/main.cpp:136-177);
 - bounded: past ``cap`` distinct refs the oldest entry is evicted (FIFO
   single-eviction — dicts iterate in insertion order, so ``next(iter(d))``

@@ -729,8 +729,9 @@ FROM c JOIN k USING (canon_url)
 # standard distributed trade for the suffix array, disclosed.
 #
 # Scale: one posexplode + one doc_id window build the gram stream (the
-# tokenizer runs ONCE per doc — shingle_rows pattern; never inline a
-# derived array into a lambda); the duplicate test is a map-side-combined
+# tokenizer runs ONCE per doc per pass over the stream, which is consumed
+# three times — shingle_rows pattern; never inline a derived array into a
+# lambda); the duplicate test is a map-side-combined
 # COUNT on md5(gram) with the join back co-partitioned on the same key;
 # span merging is doc_id-local. Never all-pairs, no driver action.
 

@@ -81,7 +81,7 @@ def media_decode_meta(spark: SparkSession, sf: str) -> DataFrame:
             ink = float(binarize(img).mean())
             return (w, h, len(data), round(ink, 4))
 
-        # per-worker, keyed on media_ref — same repeated-payload defense as
+        # per-task, keyed on media_ref — same repeated-payload defense as
         # the OCR path (make_ocr_fn)
         memo = RefMemo(compute)
         for pdf in batches:

@@ -216,9 +216,9 @@ def test_quarantine_mode_words(spark):
         DOCUMENTS,
     )
     meter = SpeedMeter(spark)
-    # salt_partitions=1: both occurrences land on one worker, so the
-    # distinct-payload error count is exactly 1 (cross-worker repeats
-    # legitimately count once per worker)
+    # salt_partitions=1: both occurrences land in one task, so the
+    # distinct-payload error count is exactly 1 (cross-task repeats
+    # legitimately count once per task)
     rows = X.extract_words(
         docs, salt_partitions=1, on_error="quarantine", meter=meter
     ).collect()
@@ -234,8 +234,8 @@ def test_quarantine_mode_words(spark):
 
 def test_extract_edge_inputs(spark):
     """Empty input, text-only docs, media-only docs — the routed union must
-    handle an empty branch on either side (and the stats-sized salt
-    partitioning must not choke on zero-row estimates)."""
+    handle an empty branch on either side, including a salt exchange with
+    no media rows to spread."""
     from ocr_suite_spark.schema import DOCUMENTS
 
     empty = spark.createDataFrame([], DOCUMENTS)
@@ -256,3 +256,41 @@ def test_extract_edge_inputs(spark):
     )
     rows = {r["doc_id"]: r["spans"] for r in X.extract(media_only).collect()}
     assert [(s["kind"], s["text"], s["order"]) for s in rows["m1"]] == [("media", "alpha", 3)]
+
+
+def test_salt_partitions_one_task_per_slot(spark, tmp_path):
+    """The salt exchange is sized to the cluster, not to file bytes: the
+    same media spans next to short or long text get exactly
+    defaultParallelism OCR tasks. A byte-sized count would hand the
+    long-text input several times the tasks for the same media rows, each
+    paying the fixed mapInPandas setup."""
+    import random
+
+    from ocr_suite_spark.kernels.render import make_media_ref
+    from ocr_suite_spark.schema import DOCUMENTS
+
+    rng = random.Random(7)
+
+    def docs(text_len):
+        rows = [
+            (
+                f"d{i}",
+                [
+                    {"kind": "text", "text": "".join(rng.choices("abcdefgh ", k=text_len)),
+                     "media_ref": None, "offset": 0},
+                    {"kind": "media", "text": None,
+                     "media_ref": make_media_ref(["alpha"], 0, i), "offset": 1},
+                ],
+            )
+            for i in range(64)
+        ]
+        path = str(tmp_path / f"docs{text_len}")
+        spark.createDataFrame(rows, DOCUMENTS).write.parquet(path)
+        return spark.read.parquet(path)
+
+    slots = spark.sparkContext.defaultParallelism
+    got = {
+        text_len: X._salted(X.explode_media_meta(docs(text_len)), None).rdd.getNumPartitions()
+        for text_len in (8, 40_000)
+    }
+    assert got == {8: slots, 40_000: slots}

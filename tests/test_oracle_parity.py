@@ -132,13 +132,18 @@ def _frozen_body_hash(name: str) -> str:
     """md5 of the query fn's source + its rendered oracle SQL — the freeze
     fingerprint. Limitation (disclosed): source hashing sees the query
     body, not its callee graph; kernel-path value identity is separately
-    guarded by the golden fixtures at two SFs."""
+    guarded by the golden fixtures at two SFs. Golden oracle SQL inlines
+    the absolute fixture path, so the repo root is replaced by a fixed
+    token: the pin holds wherever the repo is checked out."""
     import hashlib
     import inspect
 
+    from ocr_suite_spark.queries.common import _REPO_ROOT
+
     fn, sql = REGISTRY[name]
     src = inspect.getsource(fn)
-    return hashlib.md5((src + "\0" + (sql or "")).encode()).hexdigest()
+    sql = (sql or "").replace(_REPO_ROOT, "<repo>")
+    return hashlib.md5((src + "\0" + sql).encode()).hexdigest()
 
 
 def test_frozen_bodies_unchanged():
