@@ -8,10 +8,11 @@ Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
      "queries": {...per-query sec...}, "sf": ...,
      "docs_per_sec": ..., "n_docs": ...}
 
---scaling: run the flagship extraction at two parallelism levels (N=8,
-4N=32 threads — the sandbox stand-in for N vs 4N executors, same input,
-same artifact) in fresh subprocesses and report throughput at both plus
-scaling efficiency eff = (T_N / T_4N) / 4. Results land in BENCH.md.
+--scaling: run the flagship extraction at two parallelism levels (4N =
+the CPUs this process may run on, N = 4N // 4: 1 vs 4 on a 4-CPU host —
+the sandbox stand-in for N vs 4N executors, same input, same artifact)
+in fresh subprocesses and report throughput at both plus scaling
+efficiency eff = (T_N / T_4N) / 4. Results land in SCALING.json.
 """
 
 from __future__ import annotations
@@ -353,24 +354,31 @@ def _hw_control(nproc: int, n_imgs: int = 400) -> float:
         os.sched_setaffinity(0, old_aff)
 
 
-def run_scaling(n_docs: int = 20000, n: int = 6, n4: int = 24) -> dict:
+def run_scaling(n_docs: int = 20000) -> dict:
     """Same job (extract), same materialized input, two parallelism levels,
     fresh JVM each — the sandbox stand-in for N vs 4N executors.
 
     Protocol notes (all measured, see BENCH.md):
-    - Each level is PINNED to exactly `cores` CPUs with taskset. local[N]
-      caps task *slots*, not CPUs: the JVM side of a task (scan, shuffle
-      write, Arrow transfer) runs concurrently with its python worker, so
-      an unpinned local[6] on a 32-core box quietly burns ~2x its nominal
-      cores while local[24] saturates the box — inflating small-N
-      throughput and corrupting the ratio. Pinning gives each level the
-      fixed CPU budget a real N-core executor set has.
+    - 4N is the size of this process's CPU affinity set and N = 4N // 4.
+    - Each level is PINNED to the first `cores` CPUs of that set with
+      taskset (not to 0..cores-1, which a restricted or offset cpuset may
+      not contain). local[N] caps task *slots*, not CPUs: the JVM side of
+      a task (scan, shuffle write, Arrow transfer) runs concurrently with
+      its python worker, so an unpinned local[6] on a 32-core box quietly
+      burns ~2x its nominal cores while local[24] saturates the box —
+      inflating small-N throughput and corrupting the ratio. Pinning gives
+      each level the fixed CPU budget a real N-core executor set has.
     - Levels are INTERLEAVED over `rounds` fresh-JVM rounds and the best
       wall per level wins: this VM's per-core throughput drifts over
       minutes (event-log: identical OCR stages grew 452 -> 536 core-s
       within one process), so running all of one level before the other
       would bias whichever ran later.
     """
+    allowed = sorted(os.sched_getaffinity(0))
+    n4 = len(allowed)
+    n = n4 // 4
+    if n < 1:
+        raise RuntimeError(f"--scaling needs at least 4 CPUs, affinity set has {n4}")
     rounds = 2
     walls: dict[int, list] = {n: [], n4: []}
     results = {}
@@ -382,7 +390,8 @@ def run_scaling(n_docs: int = 20000, n: int = 6, n4: int = 24) -> dict:
         for cores in (n, n4):
             env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
             out = subprocess.run(
-                ["taskset", "-c", f"0-{cores - 1}", sys.executable, __file__,
+                ["taskset", "-c", ",".join(map(str, allowed[:cores])),
+                 sys.executable, __file__,
                  "--flagship-once", str(n_docs)],
                 env=env,
                 capture_output=True,

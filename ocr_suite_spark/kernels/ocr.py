@@ -164,9 +164,11 @@ class Recognizer:
         best = np.argmax(scores, axis=1)
         return [ALPHABET[i] for i in best], scores[np.arange(len(best)), best]
 
+    _POOL_BINS: dict[tuple[int, int], tuple] = {}
+
     @staticmethod
-    def _downsample(cell: np.ndarray) -> np.ndarray:
-        """Tight-crop a char cell and mean-pool it onto the 7x5 glyph grid.
+    def _pool(c: np.ndarray) -> np.ndarray:
+        """Mean-pool a tight float32 crop onto the centered 7x5 glyph grid.
 
         Aspect-preserving: glyph cells are square, so the pixel-per-cell unit
         comes from the crop *height* (all glyphs are full 7 rows tall); a
@@ -174,18 +176,6 @@ class Recognizer:
         grid instead of being stretched — stretching erases the width cue
         that distinguishes 'i' from 't'.
         """
-        ys = np.flatnonzero(cell.any(axis=1))
-        xs = np.flatnonzero(cell.any(axis=0))
-        if ys.size == 0 or xs.size == 0:
-            return np.zeros((GLYPH_H, GLYPH_W), dtype=np.float32)
-        c = cell[ys[0] : ys[-1] + 1, xs[0] : xs[-1] + 1].astype(np.float32)
-        return Recognizer._pool(c)
-
-    _POOL_BINS: dict[tuple[int, int], tuple] = {}
-
-    @staticmethod
-    def _pool(c: np.ndarray) -> np.ndarray:
-        """Mean-pool a tight float32 crop onto the centered 7x5 glyph grid."""
         h, w = c.shape
         # bin boundaries depend only on the crop shape — char crops cluster
         # around the glyph size, so memoizing by (h, w) removes nearly all

@@ -114,61 +114,6 @@ def rotate_nn(img: np.ndarray, deg: float, fill: int | float = PAPER) -> np.ndar
     return out
 
 
-def rotate_bilinear(img: np.ndarray, deg: float, fill: float) -> np.ndarray:
-    """Bilinear rotation about the center (same output size), float output.
-
-    Used on the *deskew* side: bilinear resampling smooths the staircase
-    artifacts that nearest-neighbor forward rotation introduced, so glyph
-    shapes survive the rotate/unrotate round trip.
-    """
-    if deg == 0:
-        return img.astype(np.float32)
-    h, w = img.shape
-    theta = np.deg2rad(deg)
-    cos_t, sin_t = np.float32(np.cos(theta)), np.float32(np.sin(theta))
-    cy, cx = np.float32((h - 1) / 2.0), np.float32((w - 1) / 2.0)
-    # broadcasted source coords (no meshgrid materialization)
-    xx = np.arange(w, dtype=np.float32)[None, :] - cx
-    yy = np.arange(h, dtype=np.float32)[:, None] - cy
-    xs = cos_t * xx + sin_t * yy + cx
-    ys = -sin_t * xx + cos_t * yy + cy
-    x0 = np.floor(xs).astype(np.int32)
-    y0 = np.floor(ys).astype(np.int32)
-    fx = xs - x0
-    fy = ys - y0
-    # clamp-to-edge gather, then overwrite fully-outside pixels with fill
-    x0c = np.clip(x0, 0, w - 1)
-    x1c = np.minimum(x0c + 1, w - 1)
-    y0c = np.clip(y0, 0, h - 1)
-    y1c = np.minimum(y0c + 1, h - 1)
-    imgf = img.astype(np.float32)
-    # flat-index gathers (np.take is measurably cheaper than 2-D fancy
-    # indexing here); arithmetic order matches the textbook weighted form
-    # g00*(1-fx) + g01*fx exactly, with in-place ops to cap temporaries —
-    # these full-crop float32 buffers are the UDF's peak memory
-    y0f = y0c * np.int32(w)
-    y1f = y1c * np.int32(w)
-    flat = imgf.ravel()
-    gx = 1 - fx
-    top = np.take(flat, y0f + x0c)
-    top *= gx
-    t2 = np.take(flat, y0f + x1c)
-    t2 *= fx
-    top += t2
-    bot = np.take(flat, y1f + x0c)
-    bot *= gx
-    b2 = np.take(flat, y1f + x1c)
-    b2 *= fx
-    bot += b2
-    top *= 1 - fy
-    bot *= fy
-    out = top
-    out += bot
-    outside = (xs < 0) | (xs > w - 1) | (ys < 0) | (ys > h - 1)
-    out[outside] = np.float32(fill)
-    return out
-
-
 _SCALED_GLYPHS: dict[str, np.ndarray] = {
     ch: np.kron(g, np.ones((SCALE, SCALE), dtype=bool)) for ch, g in GLYPHS.items()
 }

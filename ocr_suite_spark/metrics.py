@@ -26,15 +26,6 @@ class Snapshot:
     def images_per_sec(self) -> float:
         return self.n_images / self.wall_s if self.wall_s > 0 else 0.0
 
-    def as_dict(self) -> dict:
-        return {
-            "n_images": self.n_images,
-            "decode_s": round(self.decode_s, 3),
-            "ocr_s": round(self.ocr_s, 3),
-            "wall_s": round(self.wall_s, 3),
-            "images_per_sec": round(self.images_per_sec, 2),
-        }
-
 
 class SpeedMeter:
     """Driver-side accumulator bundle; pass to extract_flat/extract."""

@@ -5,17 +5,18 @@ decode frames -> bounded queue -> OCR threads -> per-frame store, i.e.
 
     documents --explode--> spans --route by kind-->
         text path  : boilerplate-strip normalizer (pure Column exprs)
-        media path : salt -> repartition -> mapInPandas OCR (Arrow batches,
-                     per-task recognizer init ~ reference's per-thread
-                     Tesseract instance, main.cpp:136-177)
+        media path : repartition on (doc_id, offset) -> mapInPandas OCR
+                     (Arrow batches, per-task recognizer init ~ reference's
+                     per-thread Tesseract instance, main.cpp:136-177)
     --union--> flat extracted spans --groupBy(doc_id) + sort by offset-->
     merged (kind, text, media_ref, order) sequences.
 
 Scale notes:
-- The only shuffles are the explicit media-path salt repartition (skew
-  defense; reference analog: LPT balancing, search.cpp:117-163) and the
-  final groupBy(doc_id) merge. Catalyst cannot push filters through
-  mapInPandas, so the kind=='media' filter is authored *upstream* of the UDF.
+- The only shuffles are the explicit media-path (doc_id, offset)
+  repartition (skew defense; reference analog: LPT balancing,
+  search.cpp:117-163) and the final groupBy(doc_id) merge. Catalyst
+  cannot push filters through mapInPandas, so the kind=='media' filter is
+  authored *upstream* of the UDF.
 - No per-row Python UDFs; the recognizer runs per Arrow batch with numpy
   kernels, and text spans never leave the JVM.
 """
@@ -113,8 +114,15 @@ def make_ocr_fn(meter=None, on_error: str = "fail"):
     def _ocr_text_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels import textnorm
         from ..kernels.ocr import Recognizer
-        from .memo import QUARANTINED, BatchStats, RefMemo, make_media_compute
+        from .memo import (
+            QUARANTINED,
+            BatchStats,
+            RefMemo,
+            drop_zip_finders,
+            make_media_compute,
+        )
 
+        drop_zip_finders()  # the next task on this worker re-reads no zips
         eng = Recognizer()
         stats = BatchStats()
         memo = RefMemo(
@@ -164,8 +172,15 @@ def make_ocr_words_fn(meter=None, on_error: str = "fail"):
 
     def _ocr_words_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels.ocr import Recognizer
-        from .memo import QUARANTINED, BatchStats, RefMemo, make_media_compute
+        from .memo import (
+            QUARANTINED,
+            BatchStats,
+            RefMemo,
+            drop_zip_finders,
+            make_media_compute,
+        )
 
+        drop_zip_finders()  # the next task on this worker re-reads no zips
         eng = Recognizer()
         stats = BatchStats()
         memo = RefMemo(
@@ -202,34 +217,30 @@ def make_ocr_words_fn(meter=None, on_error: str = "fail"):
 
 
 def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
-    """Explicit skew defense: spread media spans of hot documents across
-    partitions by salting on (doc_id, offset) before the expensive UDF.
+    """Explicit skew defense: hash-partition media spans on (doc_id, offset)
+    before the expensive UDF, so each span of a hot document lands
+    independently instead of the whole document pinning one partition —
+    the 100TB analog of the reference's largest-video problem (which it
+    LPT-balances by file size, search.cpp:117-163).
 
-    A media-heavy document (many spans, big images) otherwise pins one
-    partition — the 100TB analog of the reference's largest-video problem
-    (which it LPT-balances by file size, search.cpp:117-163).
+    Each row's (doc_id, offset) is hashed straight onto the partitions.
+    Do not fold rows into a few salt values first (e.g.
+    pmod(xxhash64(doc_id, offset), n*4)): hashing a few values onto n
+    partitions is a fixed, lumpy map. On 4 slots 16 salt values landed
+    [6, 6, 3, 1], so two tasks carried 1.5x their share while two slots
+    idled. Per-row hashing lands within a few percent of even
+    (tests/test_extract.py).
 
     One shuffle into one task per slot (defaultParallelism), unless
-    salt_partitions overrides it. (A two-branch variant that repartitioned
-    heavy and light cost classes separately paid its two exchanges as
-    sequential jobs under AQE — strictly worse.) Uniform salting makes
-    every partition the same expected cost mix, so one wave finishes
-    together and there is no last-wave quantization to buy back with more
-    tasks. More tasks only add fixed cost: a mapInPandas task pays ~0.17
-    core-s before its first row even with an identity function (measured
-    on a 4-CPU host), ~0.14 s of it in PySpark's per-task
-    setup_spark_files, whose importlib.invalidate_caches() re-reads
-    pyspark.zip's directory once per cached zip importer. The count is
-    not sized from Catalyst's sizeInBytes estimate: that scales with file
-    bytes and cannot see the kind='media' filter, so it over-decomposes
-    text-heavy input (4x the tasks at ~25 media rows each, most of the
-    OCR stage spent on setup). AQE coalescing is NOT used here on
-    purpose: it targets partition bytes, and these rows are bytes-tiny
-    but compute-heavy.
+    salt_partitions overrides it: with even partitions one wave finishes
+    together, and more tasks only add fixed cost. The count is not sized
+    from Catalyst's sizeInBytes estimate: that scales with file bytes and
+    cannot see the kind='media' filter, so it over-decomposes text-heavy
+    input. AQE coalescing is NOT used here on purpose: it targets
+    partition bytes, and these rows are bytes-tiny but compute-heavy.
     """
     n = salt_partitions or media.sparkSession.sparkContext.defaultParallelism
-    salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n * 4))
-    return media.repartition(n, salt)
+    return media.repartition(n, "doc_id", "offset")
 
 
 def extract_flat(

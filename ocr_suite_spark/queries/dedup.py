@@ -19,30 +19,12 @@ from .common import DUCK_TOKENS, floor3, t, tokens_col
 
 N_MINHASH = 8
 N_BANDS = 2  # 4 rows per band
-SHINGLE_K = 3
 
 # DuckDB fragment: ordered 3-token shingles from the normalized token list
 DUCK_SHINGLES = (
     f"list_transform(generate_series(1, greatest(len({DUCK_TOKENS}) - 2, 0)), "
     f"i -> {DUCK_TOKENS}[i] || ' ' || {DUCK_TOKENS}[i+1] || ' ' || {DUCK_TOKENS}[i+2])"
 )
-
-
-def shingles_col(text: Column) -> Column:
-    """Ordered 3-token shingles (with multiplicity) of the normalized tokens."""
-    toks = tokens_col(text)
-    return F.when(
-        F.size(toks) >= SHINGLE_K,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - SHINGLE_K),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-                F.element_at(toks, i + 3),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def shingle_rows(docs: DataFrame) -> DataFrame:
@@ -73,17 +55,6 @@ def shingle_rows(docs: DataFrame) -> DataFrame:
         .where(F.col("_t2").isNotNull())
         .drop("_t2")
     )
-
-
-def _minhash_cols(sh: Column) -> list[Column]:
-    """MinHash signature: per seed s, min over shingles of md5('s|'+shingle).
-    Fixed-length hex strings make lexicographic min == numeric min."""
-    return [
-        F.array_min(F.transform(sh, lambda x: F.md5(F.concat(F.lit(f"{s}|"), x)))).alias(
-            f"mh{s}"
-        )
-        for s in range(N_MINHASH)
-    ]
 
 
 def _duck_minhash(s: int) -> str:
@@ -184,14 +155,6 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
 
 # ---------------------------------------------------------------------------
 # SimHash (16-bit, token-weighted)
-
-
-def _simhash_bits():
-    hexdig = "89abcdef"  # nibbles with the top bit set
-    return [
-        (j, tuple(hexdig))
-        for j in range(16)
-    ]
 
 
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:

@@ -727,8 +727,8 @@ DSIR_TARGET_LANG = "en"
 
 
 def _dsir_bigrams(toks: Column) -> Column:
-    """Ordered 2-token grams of the normalized token list (shingles_col
-    with K=2; kept local so dedup's K=3 constant stays single-purpose)."""
+    """Ordered 2-token grams of the normalized token list (the 2-token
+    analog of dedup's 3-token shingles)."""
     return F.when(
         F.size(toks) >= 2,
         F.transform(

@@ -13,19 +13,18 @@ from pyspark.sql import functions as F
 
 @pytest.fixture(scope="module")
 def media_tbl(spark):
-    """A media-span projection bucketed on the salt key, as the ingest job
-    would write it (pre-salted input = no salt exchange at extract time)."""
+    """A media-span projection bucketed on the salt exchange's key
+    (doc_id, offset), as the ingest job would write it (pre-salted input =
+    no salt exchange at extract time)."""
     df = spark.range(5000).select(
         F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("doc_id"),
         (F.col("id") % 97).cast("int").alias("offset"),
         F.concat(F.lit("img://"), F.col("id").cast("string")).alias("media_ref"),
     )
-    salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(64))
     (
-        df.withColumn("salt", salt)
-        .write.mode("overwrite")
-        .bucketBy(16, "salt")
-        .sortBy("salt")
+        df.write.mode("overwrite")
+        .bucketBy(16, "doc_id", "offset")
+        .sortBy("doc_id", "offset")
         .format("parquet")
         .saveAsTable("media_bucketed_t")
     )
@@ -55,9 +54,10 @@ def test_bucketed_scan_satisfies_group_distribution(media_tbl):
     """groupBy on the bucket key over a bucketed table plans with NO
     Exchange — the scan itself provides the hash distribution. This is the
     exact mechanism that deletes the extract pipeline's salt exchange when
-    the ingest table is bucketed on xxhash64(doc_id, offset)."""
+    the ingest table is bucketed on (doc_id, offset), the exchange's own
+    hash key."""
     plan = (
-        media_tbl.groupBy("salt")
+        media_tbl.groupBy("doc_id", "offset")
         .agg(F.count("*").alias("n"))
         ._jdf.queryExecution()
         .executedPlan()

@@ -294,3 +294,66 @@ def test_salt_partitions_one_task_per_slot(spark, tmp_path):
         for text_len in (8, 40_000)
     }
     assert got == {8: slots, 40_000: slots}
+
+
+def test_salt_exchange_balances_rows(spark):
+    """The salt exchange hashes each (doc_id, offset) straight onto the
+    partitions, so rows split near-evenly, hot documents included (500 docs
+    x 8 media spans). Folding rows into n*4 salt values first and hashing
+    those onto n partitions put up to 2x the mean on one task."""
+    media = spark.range(4000).select(
+        F.concat(F.lit("doc-"), (F.col("id") % 500).cast("string")).alias("doc_id"),
+        (F.col("id") / 500).cast("int").alias("offset"),
+        F.concat(F.lit("img://"), F.col("id").cast("string")).alias("media_ref"),
+    )
+    for n in (3, 4, 8):
+        rows = X._salted(media, n).rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+        assert len(rows) == n and sum(rows) == 4000
+        assert max(rows) / (4000 / n) <= 1.10, (n, rows)
+
+
+def test_drop_zip_finders(tmp_path, monkeypatch):
+    """drop_zip_finders removes only the cached zip importers, and a module
+    from the same archive still imports afterwards — from zipimport's
+    directory cache, without re-reading the archive."""
+    import sys
+    import zipfile
+    import zipimport
+
+    from ocr_suite_spark.operators.memo import drop_zip_finders
+
+    archive = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("_ocs_zip_probe_a.py", "A = 1\n")
+        z.writestr("_ocs_zip_probe_b.py", "B = 2\n")
+    saved_path = list(sys.path)
+    sys.path.insert(0, archive)
+    try:
+        import _ocs_zip_probe_a
+
+        assert _ocs_zip_probe_a.A == 1
+        assert isinstance(sys.path_importer_cache.get(archive), zipimport.zipimporter)
+        others = {
+            p: f
+            for p, f in sys.path_importer_cache.items()
+            if not isinstance(f, zipimport.zipimporter)
+        }
+        drop_zip_finders()
+        left = sys.path_importer_cache
+        assert not any(isinstance(f, zipimport.zipimporter) for f in left.values())
+        assert all(left.get(p, "missing") is f for p, f in others.items())
+
+        reads = []
+        read_directory = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda p: reads.append(p) or read_directory(p)
+        )
+        import _ocs_zip_probe_b
+
+        assert _ocs_zip_probe_b.B == 2
+        assert reads == []
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.pop(archive, None)
+        for name in ("_ocs_zip_probe_a", "_ocs_zip_probe_b"):
+            sys.modules.pop(name, None)
